@@ -62,20 +62,25 @@ def read_text(spark: SparkSession, path_str: str) -> str:
         stream.close()
 
 
+# raised by FileContext for a scheme with no AbstractFileSystem binding
+_UNSUPPORTED_FS = "org.apache.hadoop.fs.UnsupportedFileSystemException"
+
+
 def write_text_atomic(spark: SparkSession, path_str: str, content: str) -> None:
     """Write-then-rename commit: the file never exists half-written under its
     final name (the checkpoint protocol's atomicity requirement).
 
-    Rename-over-existing uses ``FileContext.rename(…, Rename.OVERWRITE)``,
-    which is a single atomic overwrite on HDFS and local file: — a concurrent
-    reader of manifest.json / a checkpoint row during a rewrite sees either
-    the old or the new complete file, never a missing one. Schemes with no
-    ``AbstractFileSystem`` binding (e.g. s3a without ``fs.AbstractFileSystem.
-    s3a.impl``) fall back to delete-then-rename; there, and on object stores
-    where rename is copy+delete anyway, a reader can observe a brief
-    missing-file window during a REWRITE (first writes are unaffected) and
-    must retry — content atomicity (no half-written bytes) still holds on
-    every scheme."""
+    Rename-over-existing uses ``FileContext.rename(…, Rename.OVERWRITE)``.
+    On local ``file:`` that is delete-then-rename, so a reader of a
+    manifest.json or checkpoint row during a REWRITE can briefly find no
+    file (never a partial one) and must retry; first writes have no such
+    window. A scheme with no ``AbstractFileSystem`` binding (Hadoop raises
+    ``UnsupportedFileSystemException``, e.g. s3a without
+    ``fs.AbstractFileSystem.s3a.impl``) falls back to an explicit
+    delete-then-rename through ``FileSystem``, with the same window. Every
+    other failure raises with its Java cause attached."""
+    from py4j.protocol import Py4JJavaError
+
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     fs, final_path = _fs_path(spark, path_str)
@@ -87,16 +92,15 @@ def write_text_atomic(spark: SparkSession, path_str: str, content: str) -> None:
     finally:
         out.close()
     try:
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            final_path.toUri(), conf
-        )
-        opts = spark.sparkContext._gateway.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1
-        )
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        fc.rename(tmp_path, final_path, opts)  # throws on failure
-    except Exception:  # noqa: BLE001 — scheme without an AbstractFileSystem
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(final_path.toUri(), conf)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != _UNSUPPORTED_FS:
+            raise
         if fs.exists(final_path):
             fs.delete(final_path, False)
         if not fs.rename(tmp_path, final_path):
-            raise IOError(f"rename {tmp_str} -> {path_str} failed") from None
+            raise OSError(f"rename {tmp_str} -> {path_str} failed")
+        return
+    opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
+    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+    fc.rename(tmp_path, final_path, opts)  # raises on failure

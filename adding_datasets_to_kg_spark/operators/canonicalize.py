@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 
 # MEASURED bound (jobs/bench_cc_crossover.py, BENCH.md §5a; local[32],
 # CURIE-string clique edges): the WALL crossover is beyond 2M edges — driver
@@ -97,16 +98,15 @@ def connected_components(
     (verified by tests at the boundary). Set driver_threshold=0 to force
     the distributed path.
     """
-    spark = edges.sparkSession
     if driver_threshold > 0 and edges.limit(driver_threshold + 1).count() <= driver_threshold:
         pairs = [
             (r[0], r[1])
             for r in edges.select(id_a, id_b).collect()
         ]
-        out = _driver_union_find(pairs)
-        if not out:
-            return spark.createDataFrame([], "id string, canonical_id string")
-        return spark.createDataFrame(out, "id string, canonical_id string")
+        # Arrow-local result: readers (the normalization_map self-join, the
+        # failures write) stay in the JVM instead of starting Python workers
+        return local_frame(edges.sparkSession, _driver_union_find(pairs),
+                           "id string, canonical_id string")
     labels, _ = star_contraction(edges, id_a, id_b, max_iterations)
     return labels
 

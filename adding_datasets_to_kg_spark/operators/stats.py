@@ -9,33 +9,19 @@ Reference parity (G5/G6, A5-A8 in SURVEY.md §2):
 - degree histogram         ← agent notebook cell 3 +
   /root/reference/data/goldenkg_v1_stats.csv (200-bin histogram).
 
-Scale notes: category counts explode the (small) category array — one
-shuffle; predicate counts are a map-side-combinable groupBy; the degree agg
-is the skew hot spot (hub nodes) → AQE + two-phase salted count.
+Scale notes: ``graph_metadata`` is three actions, two of them grouped
+counts whose keys (category arrays; predicate × source pairs) are
+dictionary-cardinality, so each collects a few rows and the driver derives
+totals and per-key counts from them. The degree agg is the skew hot spot
+(hub nodes) → AQE + two-phase salted count.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def category_counts(nodes: DataFrame) -> DataFrame:
-    return (
-        nodes.select(F.explode_outer("category").alias("category"))
-        .groupBy("category")
-        .agg(F.count(F.lit(1)).alias("node_count"))
-    )
-
-
-def predicate_counts(edges: DataFrame) -> DataFrame:
-    return edges.groupBy("predicate").agg(F.count(F.lit(1)).alias("edge_count"))
-
-
-def source_counts(edges: DataFrame) -> DataFrame:
-    return edges.groupBy("primary_knowledge_source").agg(
-        F.count(F.lit(1)).alias("edge_count")
-    )
 
 
 def dangling_edges(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -106,20 +92,27 @@ def degree_summary(edges: DataFrame) -> DataFrame:
 
 def graph_metadata(nodes: DataFrame, edges: DataFrame) -> dict:
     """G5: the metadata dict the reference dumps to {graph_id}_metadata.json
-    (metadata.py:5-10)."""
+    (metadata.py:5-10).
+
+    Three actions: one grouped count per table plus the dangling count.
+    ``category_counts`` counts array elements; a null or empty category
+    array and a null element all count as ``__uncategorized__``, as they
+    would under ``explode_outer``."""
+    node_count, categories = 0, Counter()
+    for r in nodes.groupBy("category").count().collect():
+        node_count += r["count"]
+        for c in r["category"] or [None]:
+            categories[c] += r["count"]
+    edge_count, predicates, sources = 0, Counter(), Counter()
+    for r in edges.groupBy("predicate", "primary_knowledge_source").count().collect():
+        edge_count += r["count"]
+        predicates[r["predicate"]] += r["count"]
+        sources[r["primary_knowledge_source"]] += r["count"]
     return {
-        "node_count": nodes.count(),
-        "edge_count": edges.count(),
-        "category_counts": {
-            (r["category"] or "__uncategorized__"): r["node_count"]
-            for r in category_counts(nodes).collect()
-        },
-        "predicate_counts": {
-            r["predicate"]: r["edge_count"] for r in predicate_counts(edges).collect()
-        },
-        "source_counts": {
-            r["primary_knowledge_source"]: r["edge_count"]
-            for r in source_counts(edges).collect()
-        },
+        "node_count": node_count,
+        "edge_count": edge_count,
+        "category_counts": {(c or "__uncategorized__"): n for c, n in categories.items()},
+        "predicate_counts": dict(predicates),
+        "source_counts": dict(sources),
         "dangling_edge_count": dangling_edges(nodes, edges).count(),
     }

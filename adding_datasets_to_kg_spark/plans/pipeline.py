@@ -250,11 +250,6 @@ def _predicate_census(
     return [t for t, c in counts.items() if c >= 2], set(pm)
 
 
-def _ambiguous_norm_targets(edges: DataFrame, predicate_map: DataFrame | None) -> list[str]:
-    """Back-compat wrapper: just the ambiguous-target list."""
-    return _predicate_census(edges, predicate_map)[0]
-
-
 def canonicalize_graph(
     nodes: DataFrame, edges: DataFrame, lex: Lexicons, remap_edges: bool = True
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int | None]:
@@ -525,16 +520,29 @@ def run_pipeline(
     linked.count()
     edges = emit_triples(linked, lex).persist(StorageLevel.MEMORY_AND_DISK)
     edges.count()  # same reasoning: node-build + canonicalize + export fan out
-    # Predicate census on a BACKGROUND thread, overlapped with the node
-    # build + canonicalization jobs below: it is one read-only pass over the
-    # just-materialized edge cache plus a tiny predicate-map collect, and
-    # running it serially was a measured driver-only gap in the 46-job
-    # timeline (BENCH.md §1e/§1f — ~3% of wall at 32M turns). Safe to
-    # overlap: no session-conf flips, nothing pinned/unpinned on either
-    # side while it runs (see session.unpersist_new_rdds's warning — the
-    # canonicalize path only checkpoints, never diff-releases).
+    return _assemble_graph(edges, lex, output_dir, compute_metadata, graph_id)
+
+
+def _assemble_graph(edges: DataFrame, lex: Lexicons, output_dir: str | None,
+                    compute_metadata: bool, graph_id: str) -> dict:
+    """Stages 4-7 over the emitted triples, shared by both pipelines: node
+    build → canonicalize → finalize → stats → export → artifacts.
+
+    The final graph is persisted once (MEMORY_AND_DISK, one count each) and
+    every consumer reads that cache: the metadata actions, the table writes,
+    the artifact writes and the caller, instead of each re-running combine →
+    node build → canonical join → finalize split."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import StorageLevel
+
+    # Predicate census on a BACKGROUND thread, overlapped with the node
+    # build + canonicalization jobs: one read-only pass over the edges plus
+    # a tiny predicate-map collect; run serially it was a measured
+    # driver-only gap (BENCH.md §1e/§1f — ~3% of wall at 32M turns). Safe to
+    # overlap: no session-conf flips, and the census pins and releases
+    # nothing, while the RDDs this thread pins meanwhile (nodes cache, norm
+    # map checkpoint) are never diff-released (session.unpersist_new_rdds).
     pool = ThreadPoolExecutor(max_workers=1)
     try:
         census = pool.submit(_predicate_census, edges, lex.predicate_map)
@@ -572,6 +580,10 @@ def run_pipeline(
         # on (subject, predicate, object) still holds, so a further dedup
         # would shuffle the full triple stream to remove nothing.
         nodes = merge_nodes(nodes)
+    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    nodes.count()
+    edges.count()
     out: dict = {"nodes": nodes, "edges": edges, "norm_map": norm_map, "failures": failures}
     if compute_metadata:
         out["metadata"] = graph_metadata(nodes, edges)
@@ -687,37 +699,5 @@ def run_pipeline_checkpointed(
             raise RuntimeError(f"induced failure after bucket {b}")
 
     raw = spark.read.parquet(f"{output_dir.rstrip(chr(47))}/triples")
-    edges = combine_bucket_triples(raw)
-    nodes = build_nodes_for_edges(edges, lex)
-    # background census overlapped with canonicalization (same reasoning and
-    # safety argument as run_pipeline)
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        census = pool.submit(_predicate_census, edges, lex.predicate_map)
-        nodes, edges, norm_map, failures, n_norm = canonicalize_graph(
-            nodes, edges, lex, remap_edges=False
-        )
-        ambiguous, pred_keys = census.result()
-    finally:
-        # same reasoning as run_pipeline: don't start a queued census while
-        # unwinding from a canonicalize failure
-        pool.shutdown(wait=False, cancel_futures=True)
-    if norm_map is not None:
-        # Post-remap collisions (two clique members mentioned in one turn
-        # collapsing onto one canonical object) were previously left in the
-        # checkpointed output — run_pipeline deduped them, this path did not.
-        nodes, edges = _finalize_graph(
-            nodes, edges, norm_map, lex.predicate_map, ambiguous,
-            norm_map_rows=n_norm,
-            pred_keys=pred_keys,
-        )
-    else:
-        nodes = merge_nodes(nodes)
-    _write_graph_tables(nodes, edges, output_dir)
-    out = {"nodes": nodes, "edges": edges, "norm_map": norm_map, "failures": failures}
-    if compute_metadata:
-        out["metadata"] = graph_metadata(nodes, edges)
-    write_graph_artifacts(out, lex, output_dir, graph_id)
-    return out
+    return _assemble_graph(combine_bucket_triples(raw), lex, output_dir,
+                           compute_metadata, graph_id)

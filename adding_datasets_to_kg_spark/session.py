@@ -17,9 +17,40 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the cores this process may run on (what ``nproc`` prints), not the machine's
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _default_driver_memory() -> str:
+    """Half of the host's MemAvailable, in whole GB (at least 1g): in local
+    mode the driver heap is every executor's memory, and a heap sized past
+    what the host can give is killed, not spilled."""
+    with open("/proc/meminfo") as f:
+        avail_kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    return f"{max(1, avail_kb // 2**21)}g"
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows as an Arrow-backed local relation (DDL ``schema``).
+
+    It plans as ``LocalTableScan``, so every action over it runs in the
+    JVM. ``createDataFrame`` on a Python list instead parallelizes a pickled
+    RDD, and each action over that starts Python workers to read it. Needs
+    pyarrow: the import raises rather than falling back to the pickled path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 @contextmanager
@@ -130,7 +161,8 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "1024")
         # --- broadcast threshold: dictionary/lexicon tables are broadcast joins ---
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

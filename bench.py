@@ -25,8 +25,9 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from adding_datasets_to_kg_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # turns for the pipeline throughput bench (Spark-native generated, no driver data)
 PIPELINE_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "400000"))
 

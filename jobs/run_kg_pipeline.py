@@ -106,7 +106,7 @@ def main() -> None:
             graph_id=args.graph_id,
         )
     # both variants computed metadata (and persisted {graph_id}_metadata.json)
-    # already — reuse it, don't re-run the 6 metadata actions
+    # already — reuse it, don't re-run the metadata actions
     md = out.get("metadata") or graph_metadata(out["nodes"], out["edges"])
     md["wall_sec"] = round(time.time() - t0, 2)
     # through the Hadoop FS API: --output may be an hdfs:/s3a: root

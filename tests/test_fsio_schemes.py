@@ -97,3 +97,35 @@ def test_fsio_small_files_rawlocal_override(spark, tmp_path):
     finally:
         conf.unset("fs.file.impl")
         conf.unset("fs.file.impl.disable.cache")
+
+
+def test_write_text_atomic_raises_on_rename_failure(spark, tmp_path):
+    """A rename that fails for any reason but a missing AbstractFileSystem
+    binding raises with its Java cause and leaves the destination alone: an
+    empty directory at the final path makes FileContext's rename refuse
+    (file onto directory); delete-then-rename would have removed it."""
+    from py4j.protocol import Py4JJavaError
+
+    dest = tmp_path / "row.json"
+    dest.mkdir()
+    with pytest.raises(Py4JJavaError, match="must both be directories"):
+        fsio.write_text_atomic(spark, str(dest), "{}")
+    assert dest.is_dir()
+
+
+def test_write_text_atomic_falls_back_without_abstract_fs(spark, tmp_path):
+    """With no AbstractFileSystem bound to the scheme (FileContext raises
+    UnsupportedFileSystemException) a rewrite still lands through the
+    FileSystem delete-then-rename fallback."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "fs.AbstractFileSystem.file.impl"
+    saved = conf.get(key)
+    conf.unset(key)
+    try:
+        p = f"file://{tmp_path}/row.json"
+        fsio.write_text_atomic(spark, p, "old")
+        fsio.write_text_atomic(spark, p, "new")
+        assert fsio.read_text(spark, p) == "new"
+        assert not fsio.exists(spark, f"{p}.tmp")
+    finally:
+        conf.set(key, saved)

@@ -96,7 +96,7 @@ def test_targeted_merge_equals_full_merge(corpus, lex):
         merge_nodes_targeted,
     )
     from adding_datasets_to_kg_spark.plans.pipeline import (
-        _ambiguous_norm_targets,
+        _predicate_census,
         build_nodes_for_edges,
         canonicalize_graph,
         emit_triples,
@@ -134,7 +134,7 @@ def test_targeted_merge_equals_full_merge(corpus, lex):
     # Edge side: targeted dedup must keep exactly the keys a full dedup
     # keeps (row choice among colliding property payloads is unspecified in
     # BOTH paths, so compare the deduped key multiset, not full rows).
-    ambig = _ambiguous_norm_targets(edges_pre, lex.predicate_map)
+    ambig = _predicate_census(edges_pre, lex.predicate_map)[0]
     full_e = dedup_edges(edges)
     targeted_e = dedup_edges_targeted(edges, canon_ids, ambig)
 
@@ -154,8 +154,8 @@ def test_finalize_graph_expr_split_equals_join_fallback(corpus, lex):
     same node rows, same deduped edge keys, same endpoint remaps, same
     original_* provenance columns."""
     from adding_datasets_to_kg_spark.plans.pipeline import (
-        _ambiguous_norm_targets,
         _finalize_graph,
+        _predicate_census,
         build_nodes_for_edges,
         canonicalize_graph,
         emit_triples,
@@ -173,7 +173,7 @@ def test_finalize_graph_expr_split_equals_join_fallback(corpus, lex):
         nodes_pre, edges_pre, lex, remap_edges=False
     )
     assert norm_map.count() > 0  # the split must actually be exercised
-    ambig = _ambiguous_norm_targets(edges_pre, lex.predicate_map)
+    ambig = _predicate_census(edges_pre, lex.predicate_map)[0]
 
     n_expr, e_expr = _finalize_graph(nodes, edges, norm_map, lex.predicate_map, ambig)
     # max_inset_ids=0 forces the broadcast-join fallback on the same inputs
@@ -390,6 +390,115 @@ def test_graph_metadata_matches_committed_golden(result):
         f"got:    {json.dumps(got, sort_keys=True)}\n"
         f"golden: {json.dumps(golden, sort_keys=True)}"
     )
+
+
+def _six_action_metadata(nodes, edges):
+    """Reference: graph_metadata as six separate actions (one count or
+    grouped collect per figure), the definition the three-action version
+    must reproduce exactly."""
+    from adding_datasets_to_kg_spark.operators.stats import dangling_edges
+
+    cats = nodes.select(F.explode_outer("category").alias("category")).groupBy("category").count()
+    return {
+        "node_count": nodes.count(),
+        "edge_count": edges.count(),
+        "category_counts": {
+            (r["category"] or "__uncategorized__"): r["count"] for r in cats.collect()
+        },
+        "predicate_counts": {
+            r["predicate"]: r["count"] for r in edges.groupBy("predicate").count().collect()
+        },
+        "source_counts": {
+            r["primary_knowledge_source"]: r["count"]
+            for r in edges.groupBy("primary_knowledge_source").count().collect()
+        },
+        "dangling_edge_count": dangling_edges(nodes, edges).count(),
+    }
+
+
+def test_graph_metadata_equals_six_action_reference(spark):
+    """Hand-built graph with every category and key edge case: null, empty
+    and shared category arrays, a duplicated and a null element; null
+    predicate and source; edges dangling on the subject, the object, both,
+    and a cross-source twin of the both-dangling edge."""
+    from adding_datasets_to_kg_spark.operators.stats import graph_metadata
+
+    nodes = spark.createDataFrame(
+        [
+            ("A", ["biolink:Gene"]),
+            ("B", None),
+            ("C", []),
+            ("D", ["biolink:Disease", "biolink:Disease"]),
+            ("E", ["biolink:Gene", None]),
+            ("F", ["biolink:Gene"]),
+        ],
+        "id string, category array<string>",
+    )
+    edges = spark.createDataFrame(
+        [
+            ("A", "p1", "B", "s1"),
+            ("A", None, "C", "s1"),
+            ("B", "p1", "D", None),
+            ("X", "p2", "A", "s2"),
+            ("A", "p2", "Y", "s2"),
+            ("X", "p1", "Y", "s1"),
+            ("X", "p1", "Y", "s2"),
+        ],
+        "subject string, predicate string, object string, primary_knowledge_source string",
+    )
+    got = graph_metadata(nodes, edges)
+    assert got == _six_action_metadata(nodes, edges)
+    assert got["category_counts"] == {
+        "biolink:Gene": 3, "biolink:Disease": 2, "__uncategorized__": 3,
+    }
+    assert got["predicate_counts"] == {"p1": 4, "p2": 2, None: 1}
+    assert got["source_counts"] == {"s1": 3, "s2": 3, None: 1}
+    assert (got["node_count"], got["edge_count"], got["dangling_edge_count"]) == (6, 7, 4)
+
+
+def test_oneshot_and_checkpointed_metadata_agree(tmp_path, corpus, lex):
+    """Both pipelines run the same graph tail, so one corpus yields the same
+    metadata dict either way."""
+    oneshot = run_pipeline(corpus, lex)
+    ckpt = run_pipeline_checkpointed(corpus, lex, str(tmp_path / "ckpt"), n_buckets=2)
+    assert oneshot["metadata"] == ckpt["metadata"]
+    assert oneshot["metadata"]["edge_count"] > 0
+
+
+def test_driver_results_plan_as_local_table_scan(spark, lex):
+    """The driver union-find result and the fixture lexicons are Arrow-local
+    relations: actions over them run in the JVM, never a pickled RDD
+    (``ExistingRDD``) read by Python workers."""
+    from adding_datasets_to_kg_spark.operators.canonicalize import connected_components
+    from adding_datasets_to_kg_spark.session import local_frame
+
+    empty = local_frame(spark, [], "id string, canonical_id string")
+    assert empty.count() == 0
+    frames = {
+        "cc": connected_components(lex.id_equivalences),
+        "empty": empty,
+        "gene": lex.gene,
+        "disease": lex.disease,
+        "variant": lex.variant,
+        "id_equivalences": lex.id_equivalences,
+        "predicate_map": lex.predicate_map,
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan and "Python" not in plan, (name, plan)
+
+
+def test_local_frame_needs_arrow(spark, monkeypatch):
+    """Without pyarrow the helper raises instead of quietly building the
+    pickled-RDD relation."""
+    import sys
+
+    from adding_datasets_to_kg_spark.session import local_frame
+
+    monkeypatch.setitem(sys.modules, "pyarrow", None)
+    with pytest.raises(ImportError):
+        local_frame(spark, [("a",)], "id string")
 
 
 def test_salted_degree_agg_on_hub_skew(spark):
