@@ -10,8 +10,7 @@ never an O(n²) cross join:
 - simhash          — 64-bit sign-sum fingerprint from token hashes;
                      candidates via Manku-style 3-of-6 block-combination
                      tables (complete for Hamming ≤ 3), then exact Hamming
-                     recheck. 16-bit variant kept as the fingerprint
-                     expression (dedup_simhash_fingerprint entry).
+                     recheck.
 - n-gram Jaccard   — inverted index on shingles (explode → join on shingle)
                      with a document-frequency cutoff (hot boilerplate
                      shingles never enter the posting-list join);
@@ -26,25 +25,37 @@ DuckDB oracles in __spark_entry__ reproduce results bit-for-bit; the
 embedding hyperplane signs are md5-derived on the DRIVER (hashlib) and
 embedded as literals in both the Spark plan and the generated oracle SQL.
 
-Scale notes: every candidate self-join materializes its small key table
-(``localCheckpoint``) first, so the signature subtree is computed exactly
-once — not re-evaluated on both join sides (the round-1 10× recompute
-trap). Hot-path expressions avoid higher-order functions (``transform`` /
-``aggregate`` lambdas evaluate INTERPRETED — no whole-stage codegen):
-signatures and fingerprints use the explode → codegen'd hash-aggregate
-shape, and vector math uses the unrolled codegen'd forms in
-functions.vectors.
+Scale notes: the four near-dup families (minhash LSH, simhash, n-gram
+Jaccard, embedding cosine) share one filter-and-verify skeleton,
+:func:`_near_dup_pairs` — the shape of the set-similarity-join literature
+(e.g. *Scalable and Robust Set Similarity Join*, ICDE'18). Each family
+supplies only its signature table, its key derivation and its exact
+verifier. The skeleton materializes the signatures once
+(``localCheckpoint``), so the signature subtree is computed exactly once —
+not re-evaluated on both join sides (the round-1 10× recompute trap); it
+builds the one candidate self-equi-join on the keys with ``id_a < id_b``
+(only documents sharing a key meet — never a cross join); it materializes
+the small verified result and releases the signature blocks by their own
+RDD id (``session.release``). Hot-path expressions avoid higher-order
+functions (``transform`` / ``aggregate`` lambdas evaluate INTERPRETED — no
+whole-stage codegen): signatures and fingerprints use the explode →
+codegen'd hash-aggregate shape, and vector math uses the unrolled
+codegen'd forms in functions.vectors.
 """
 
 from __future__ import annotations
 
 import hashlib
+import operator
+from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..functions.vectors import as_double, dot_literal, dot_unrolled, norm_unrolled
+from ..session import no_wholestage_codegen, release
 
 
 def shingle_rows(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -90,39 +101,56 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-# --- minhash LSH -----------------------------------------------------------
+# --- filter-and-verify skeleton ----------------------------------------------
 
-def minhash_signature(doc_shingles: Column, n_hashes: int) -> Column:
-    """Array of per-seed min hashes, computed in ONE pass over the shingle
-    array: each shingle is hashed once per seed into an n_hashes-wide row,
-    then an element-wise-min fold collapses them. Hash_i(s) = md5('seed{i}:'
-    || s) — string min is deterministic and engine-portable.
+def _near_dup_pairs(sigs: DataFrame, keys: Callable[[DataFrame], DataFrame],
+                    verify: Callable[[DataFrame, DataFrame], DataFrame],
+                    id_col: str) -> DataFrame:
+    """Candidate generation + exact verification, shared by every near-dup
+    family below.
 
-    (Round-1 version built n_hashes separate ``array_min(transform(...))``
-    expressions, duplicating the shingle subtree n_hashes times — ~8× wasted
-    compute at bench scale.)
+    ``sigs`` is materialized once (localCheckpoint, not persist: both
+    materialize once, but the checkpoint also TRUNCATES the plan, so the
+    signature subtree is not embedded — and re-analyzed — in both join sides
+    and the verifier). ``keys(sigs)`` yields ``(id, key columns…)`` rows;
+    pairs meet only through the self-equi-join on every key column with
+    ``a.id < b.id``, and are reduced to ``(id_a, id_b, shared)`` where
+    ``shared`` counts the key rows the pair matched on (families that only
+    need distinct pairs drop it, and the optimizer prunes the count).
+    ``verify(cand, sigs)`` rechecks candidates exactly; its SMALL result is
+    materialized, then the corpus-scale signature blocks are released
+    (leaked checkpoint blocks were measured to slow later jobs in the same
+    session 3.6×). The join key space grows with corpus size, so buckets
+    stay small; hot keys are AQE-skew-split.
     """
-    hashed = F.transform(
-        doc_shingles,
-        lambda s: F.array(*[F.md5(F.concat(F.lit(f"seed{i}:"), s)) for i in range(n_hashes)]),
+    sigs = sigs.localCheckpoint(eager=True)
+    k = keys(sigs)
+    a, b = k.alias("a"), k.alias("b")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in k.columns if c != id_col]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    cand = (
+        a.join(b, reduce(operator.and_, on))
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
     )
-    # 'zz…' sorts after every md5 hex string, so it is the fold identity.
-    init = F.array_repeat(F.lit("zz"), n_hashes)
-    return F.aggregate(
-        hashed, init, lambda acc, row: F.zip_with(acc, row, lambda a, b: F.least(a, b))
-    )
+    result = verify(cand, sigs).localCheckpoint(eager=True)
+    release(sigs)
+    return result
 
+
+# --- minhash LSH -----------------------------------------------------------
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """(id, h0..h{n-1}) — per-seed min hashes via the explode → codegen'd
-    hash-aggregate shape: explode distinct shingles to rows, compute the
-    n_hashes seeded md5s per shingle in one codegen'd projection, then
-    groupBy(id) with n_hashes MIN aggregates. Same values as
-    :func:`minhash_signature` (min over distinct = min over all), but every
-    operator is whole-stage-codegen'd — the HOF fold formulation evaluates
-    interpreted (HOFs don't codegen) and measured ~4× slower at sf0.1. The
-    map-side partial MIN reduces the exchange to n_hashes strings per doc.
+    """(id, h0..h{n-1}) — per-seed min hashes, Hash_i(s) = md5('seed{i}:' ||
+    s) (string min is deterministic and engine-portable), via the explode →
+    codegen'd hash-aggregate shape: explode distinct shingles to rows,
+    compute the n_hashes seeded md5s per shingle in one codegen'd
+    projection, then groupBy(id) with n_hashes MIN aggregates. Every
+    operator is whole-stage-codegen'd — a higher-order per-document fold
+    evaluates interpreted (HOFs don't codegen) and measured ~4× slower at
+    sf0.1. The map-side partial MIN reduces the exchange to n_hashes strings
+    per doc.
 
     ``shingles`` is never empty (< n tokens → one whole-text shingle), so
     the explode drops no documents.
@@ -140,10 +168,15 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
-def minhash_bands(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  n_hashes: int = 8, band_size: int = 2, shingle_n: int = 3) -> DataFrame:
-    """(id, band_idx, band_key) — LSH banding; same band_key → candidate."""
-    n_bands = n_hashes // band_size
+def dedup_minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                      n_hashes: int = 8, band_size: int = 2, shingle_n: int = 3) -> DataFrame:
+    """Candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band.
+
+    Signatures are the band table (id, band_idx, band_key): the minhash
+    signature cut into n_hashes / band_size bands, each keyed by its
+    concatenated hashes. Pairs with an equal key in the same band are the
+    result; there is no further verification.
+    """
     sig = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n)
     bands = sig.select(
         id_col,
@@ -155,54 +188,14 @@ def minhash_bands(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
                         F.concat_ws("|", *[F.col(f"h{b * band_size + j}")
                                            for j in range(band_size)]).alias("band_key"),
                     )
-                    for b in range(n_bands)
+                    for b in range(n_hashes // band_size)
                 ]
             )
         ).alias("band"),
+    ).select(id_col, "band.band_idx", "band.band_key")
+    return _near_dup_pairs(
+        bands, lambda s: s, lambda cand, _: cand.select("id_a", "id_b"), id_col
     )
-    return bands.select(id_col, "band.band_idx", "band.band_key")
-
-
-def dedup_minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      n_hashes: int = 8, band_size: int = 2, shingle_n: int = 3) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band.
-
-    Scale shape: explode to (band_idx, band_key) → MATERIALIZE the small
-    band table (localCheckpoint: signature computed once, not once per join
-    side) → self-equi-join on the band key → distinct pairs. The join key
-    space grows with corpus size, so bucket sizes stay small; hot bands
-    (boilerplate docs) are AQE-skew-split.
-    """
-    from ..session import persistent_rdd_ids, unpersist_new_rdds
-
-    spark = docs.sparkSession
-    before = persistent_rdd_ids(spark)
-    # localCheckpoint, not persist: BOTH materialize once for the two join
-    # sides, but localCheckpoint also TRUNCATES the plan — the signature
-    # subtree would otherwise be embedded (and re-analyzed) twice in every
-    # downstream plan. The corpus-scale checkpoint blocks are explicitly
-    # released after the small pair result is pinned (round-2 verdict
-    # finding: leaked checkpoint blocks degraded the driver e2e bench 3.6×).
-    bands = minhash_bands(docs, text_col, id_col, n_hashes, band_size, shingle_n)
-    bands = bands.localCheckpoint(eager=True)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    mid = persistent_rdd_ids(spark)
-    # materialize the SMALL pair result, then release the corpus-scale band
-    # table (everything pinned between the two snapshots)
-    result = pairs.localCheckpoint(eager=True)
-    unpersist_new_rdds(spark, before, keep=persistent_rdd_ids(spark) - mid)
-    return result
 
 
 # --- simhash ----------------------------------------------------------------
@@ -398,63 +391,44 @@ def dedup_simhash64(docs: DataFrame, max_hamming: int | None = None,
     replaces saturates its 2^16 buckets around 10^8 docs); near-dup clusters
     are small; no cross join anywhere.
     """
-    from ..session import persistent_rdd_ids, unpersist_new_rdds
-
     bounds, combos = simhash_block_scheme(n_blocks, complete_hamming)
     if max_hamming is None:
         max_hamming = complete_hamming
-    spark = docs.sparkSession
-    before = persistent_rdd_ids(spark)
-    # localCheckpoint (not persist): truncates the fingerprint plan so the
-    # three consumers below (explode + both recheck sides) embed a leaf RDD
-    # scan, not the 64-fold aggregate subtree; blocks released after the
-    # small pair result is pinned.
-    fp = simhash64_fingerprints(docs, text_col, id_col).localCheckpoint(eager=True)
     band_vals = [F.col(f"b{i}") for i in range(SIMHASH_BANDS)]
     blocks = [_simhash_block(band_vals, lo, hi) for lo, hi in bounds]
-    exploded = fp.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    F.concat_ws(
-                        "|", *[blocks[b].cast("string") for b in combo]
-                    ).alias("key"),
-                )
-                for t, combo in enumerate(combos)
-            ])
-        ).alias("c"),
-    ).select(id_col, "c.tbl", "c.key")
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+
+    def keys(fp: DataFrame) -> DataFrame:
+        return fp.select(
+            id_col,
+            F.explode(
+                F.array(*[
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        F.concat_ws(
+                            "|", *[blocks[b].cast("string") for b in combo]
+                        ).alias("key"),
+                    )
+                    for t, combo in enumerate(combos)
+                ])
+            ).alias("c"),
+        ).select(id_col, "c.tbl", "c.key")
+
+    def verify(cand: DataFrame, fp: DataFrame) -> DataFrame:
+        fa = fp.select(F.col(id_col).alias("id_a"), *[F.col(f"b{i}").alias(f"a{i}") for i in range(SIMHASH_BANDS)])
+        fb = fp.select(F.col(id_col).alias("id_b"), *[F.col(f"b{i}").alias(f"c{i}") for i in range(SIMHASH_BANDS)])
+        hamming = sum(
+            F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"c{i}")))
+            for i in range(SIMHASH_BANDS)
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    fa = fp.select(F.col(id_col).alias("id_a"), *[F.col(f"b{i}").alias(f"a{i}") for i in range(SIMHASH_BANDS)])
-    fb = fp.select(F.col(id_col).alias("id_b"), *[F.col(f"b{i}").alias(f"c{i}") for i in range(SIMHASH_BANDS)])
-    hamming = sum(
-        F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"c{i}")))
-        for i in range(SIMHASH_BANDS)
-    )
-    pairs = (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    mid = persistent_rdd_ids(spark)
-    # small pair result materialized, corpus-scale fingerprints released
-    result = pairs.localCheckpoint(eager=True)
-    unpersist_new_rdds(spark, before, keep=persistent_rdd_ids(spark) - mid)
-    return result
+        return (
+            cand.join(fa, "id_a")
+            .join(fb, "id_b")
+            .withColumn("hamming", hamming.cast("int"))
+            .filter(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming")
+        )
+
+    return _near_dup_pairs(simhash64_fingerprints(docs, text_col, id_col), keys, verify, id_col)
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame,
@@ -531,37 +505,22 @@ def dedup_ngram_jaccard(docs: DataFrame, threshold: float = 0.8,
             .select("s")
         )
         sh = sh.join(hot, "s", "left_anti")
-    # Materialize the (filtered) posting list once for its three consumers
-    # (sizes + both self-join sides) — MEMORY_AND_DISK persist, not
-    # localCheckpoint: the posting list is corpus-scale, so spill-when-needed
-    # beats an unconditional full disk copy; the eager count() prevents AQE's
-    # concurrent query stages from racing the first materialization.
-    from pyspark import StorageLevel
 
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    result = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    # materialize the SMALL pair result, then release the corpus-scale
-    # posting list — persisting it for the session lifetime would pin one
-    # copy per corpus processed
-    result = result.localCheckpoint(eager=True)
-    sh.unpersist()
-    return result
+    def verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
+        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+        sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
+        sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+        return (
+            cand.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn("jaccard", F.round(F.col("shared") / (F.col("sz_a") + F.col("sz_b") - F.col("shared")), 4))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
+        )
+
+    # the (filtered) posting list is the signature table: shingles are the
+    # keys, and ``shared`` — the number of matched shingles — is |A ∩ B|
+    return _near_dup_pairs(sh, lambda s: s, verify, id_col)
 
 
 # --- embedding cosine ---------------------------------------------------------
@@ -620,30 +579,6 @@ def embedding_lsh_pairs(embs: DataFrame, threshold: float = 0.95,
             ])
         ).alias("band"),
     ).select(id_col, "band.band_idx", "band.band_key")
-    # no_wholestage_codegen: the 16×64-term plane-dot projection exceeds
-    # janino's 64 KB method limit — the doomed compile attempt costs seconds
-    # PER INVOCATION (failures are not cached) before the engine falls back
-    # to interpreted eval anyway; skipping the attempt is strictly faster
-    from ..session import no_wholestage_codegen, persistent_rdd_ids, unpersist_new_rdds
-
-    spark = embs.sparkSession
-    before = persistent_rdd_ids(spark)
-    # localCheckpoint (not persist): truncates the 16×64-term plane-dot
-    # subtree so neither self-join side re-embeds (and re-analyzes) it;
-    # blocks released after the final pair table below.
-    with no_wholestage_codegen(spark):
-        bands = bands.localCheckpoint(eager=True)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
     # norms computed per VECTOR on the join build sides, not per candidate
     # pair — bit-identical cosine (see norm_unrolled) at 1/3 the per-pair
     # expression size
@@ -651,35 +586,42 @@ def embedding_lsh_pairs(embs: DataFrame, threshold: float = 0.95,
                   norm_unrolled("v", dim).alias("na"))
     vb = d.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
                   norm_unrolled("v", dim).alias("nb"))
-    scored = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot_unrolled("va", "vb", dim)
-                / (F.col("na") * F.col("nb")),
-                3,
-            ).alias("cos"),
+    scored = []
+
+    def verify(cand: DataFrame, _: DataFrame) -> DataFrame:
+        # Materialize the scored candidates BEFORE the threshold filter: with
+        # the filter in the same plan, PushPredicateThroughJoin inlines the
+        # whole 64-term dot into the join CONDITION and the projection
+        # evaluates it a second time — and at this expression width the stage
+        # falls out of whole-stage codegen, so the double interpreted
+        # evaluation dominates (measured up to 4× on the sf0.1 recheck). The
+        # scored table is candidate-scale (3 narrow columns), which the LSH
+        # pruning already bounds; it is released once the skeleton has
+        # materialized the (smaller) filtered result.
+        scored.append(
+            cand.join(va, "id_a")
+            .join(vb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.round(
+                    dot_unrolled("va", "vb", dim)
+                    / (F.col("na") * F.col("nb")),
+                    3,
+                ).alias("cos"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
-    # Materialize the scored candidates BEFORE the threshold filter: with
-    # the filter in the same plan, PushPredicateThroughJoin inlines the
-    # whole 64-term dot into the join CONDITION and the projection evaluates
-    # it a second time — and at this expression width the stage falls out of
-    # whole-stage codegen, so the double interpreted evaluation dominates
-    # (measured up to 4× on the sf0.1 recheck). The scored table is
-    # candidate-scale (3 narrow columns), which the LSH pruning already
-    # bounds. localCheckpoint truncates the dot subtree for the filter below.
-    # no_wholestage_codegen: same doomed-compile story as the band table.
-    with no_wholestage_codegen(spark):
-        scored = scored.localCheckpoint(eager=True)
-        mid = persistent_rdd_ids(spark)
-        # final (threshold-surviving) pair table is the smallest of the
-        # three — checkpoint it, release everything corpus/candidate-scale
-        result = scored.filter(F.col("cos") >= threshold).localCheckpoint(eager=True)
-    unpersist_new_rdds(spark, before, keep=persistent_rdd_ids(spark) - mid)
+        return scored[0].filter(F.col("cos") >= threshold)
+
+    # no_wholestage_codegen: the 16×64-term plane-dot projection (band
+    # table) and the 64-term cosine (scored table) exceed janino's 64 KB
+    # method limit — the doomed compile attempt costs seconds PER
+    # INVOCATION (failures are not cached) before the engine falls back to
+    # interpreted eval anyway; skipping the attempt is strictly faster
+    with no_wholestage_codegen(embs.sparkSession):
+        result = _near_dup_pairs(bands, lambda s: s, verify, id_col)
+    release(*scored)
     return result
 
 

@@ -17,8 +17,6 @@ path, which AQE does not split.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -212,17 +210,3 @@ def dedup_edges_targeted(
     rest = flagged.filter(~F.col("_cap")).drop("_cap")
     return capable.unionByName(rest).select(*edges.columns)
 
-
-def merge_graphs(
-    node_dfs: list[DataFrame],
-    edge_dfs: list[DataFrame],
-    dedup_cross_source_edges: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """U1/U2 + J8: union per-source graphs, merge nodes, concat edges
-    (merge.py:19-22 semantics)."""
-    nodes = reduce(DataFrame.unionByName, node_dfs)
-    edges = reduce(DataFrame.unionByName, edge_dfs)
-    merged_nodes = merge_nodes(nodes)
-    if dedup_cross_source_edges:
-        edges = dedup_edges(edges)
-    return merged_nodes, edges

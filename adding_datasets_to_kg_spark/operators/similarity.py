@@ -82,13 +82,12 @@ def refine_centroids(c: DataFrame, centroids: DataFrame, n_iters: int = 1,
     re-normalized. Each iteration materializes (localCheckpoint) to keep
     plans O(1) deep.
     """
-    from ..session import no_wholestage_codegen, persistent_rdd_ids, unpersist_new_rdds
+    from ..session import no_wholestage_codegen, release
 
     if n_iters <= 0:
         return centroids
     spark = c.sparkSession
-    before = persistent_rdd_ids(spark)
-    mid = before
+    checkpoints = []
     for _ in range(n_iters):
         assign = _assign_cells(c, centroids, id_col, dim)
         dims = c.join(assign, id_col).select(
@@ -114,12 +113,12 @@ def refine_centroids(c: DataFrame, centroids: DataFrame, n_iters: int = 1,
             "cell_id",
             F.coalesce("new_centroid", "centroid").alias("centroid"),
         )
-        mid = persistent_rdd_ids(spark)
         with no_wholestage_codegen(spark):
             centroids = centroids.localCheckpoint(eager=True)
-    # centroid tables are n_cells-sized — release every iteration's blocks
-    # except the final one (still referenced by the returned DataFrame)
-    unpersist_new_rdds(spark, before, keep=persistent_rdd_ids(spark) - mid)
+        checkpoints.append(centroids)
+    # release every iteration's blocks except the final one (the returned
+    # DataFrame reads it)
+    release(*checkpoints[:-1])
     return centroids
 
 

@@ -540,9 +540,9 @@ def _assemble_graph(edges: DataFrame, lex: Lexicons, output_dir: str | None,
     # build + canonicalization jobs: one read-only pass over the edges plus
     # a tiny predicate-map collect; run serially it was a measured
     # driver-only gap (BENCH.md §1e/§1f — ~3% of wall at 32M turns). Safe to
-    # overlap: no session-conf flips, and the census pins and releases
-    # nothing, while the RDDs this thread pins meanwhile (nodes cache, norm
-    # map checkpoint) are never diff-released (session.unpersist_new_rdds).
+    # overlap: no session-conf flips, the census pins and releases nothing,
+    # and operators release only their own checkpoints by RDD id
+    # (session.release), never an RDD another thread pinned meanwhile.
     pool = ThreadPoolExecutor(max_workers=1)
     try:
         census = pool.submit(_predicate_census, edges, lex.predicate_map)

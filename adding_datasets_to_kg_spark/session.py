@@ -71,38 +71,27 @@ def no_wholestage_codegen(spark: SparkSession):
         spark.conf.set("spark.sql.codegen.wholeStage", prev)
 
 
-def persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of every RDD currently pinned in the block manager (persisted or
-    localCheckpointed). Used with :func:`unpersist_new_rdds` to release an
-    operator's materialized intermediates without giving up localCheckpoint's
-    plan TRUNCATION: persist keeps the full analyzed subtree embedded in
-    every downstream plan — for the unrolled 64-term vector trees that is
-    seconds of re-analysis per consumer (measured 2-3× on the IVF/LSH
-    entries) — while localCheckpoint replaces it with a leaf RDD scan."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {jrdd.id() for jrdd in jmap.values()}
+def release(*frames: DataFrame) -> None:
+    """Unpersist exactly the RDD pinned behind each ``localCheckpoint`` result.
 
-
-def unpersist_new_rdds(spark: SparkSession, before: set[int], keep: set[int] = frozenset()) -> None:
-    """Release every pinned RDD created since ``before`` was snapshotted,
-    except ids in ``keep`` (typically the operator's own small checkpointed
-    result). Non-blocking. Safe for localCheckpointed intermediates that are
-    fully consumed: their blocks are never read again.
-
-    WARNING — single-threaded sessions only. The snapshot/diff is over
-    GLOBAL block-manager state: if another thread pins an RDD between
-    ``before`` and this call, its blocks are released too, and for a
-    localCheckpointed RDD the lineage is already truncated, so that is an
-    unrecoverable job failure (not a recompute). Every current call site
-    runs its snapshot → materialize → release sequence sequentially on the
-    driver thread; keep it that way, or switch callers to tracking the exact
-    ids created by each localCheckpoint (diff immediately after the
-    checkpoint call) before introducing driver-side concurrency."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for jrdd in list(jmap.values()):
-        rid = jrdd.id()
-        if rid not in before and rid not in keep:
-            jrdd.unpersist(False)
+    Operators materialize intermediates with localCheckpoint, not persist:
+    persist keeps the full analyzed subtree embedded in every downstream
+    plan — for the unrolled 64-term vector trees that is seconds of
+    re-analysis per consumer (measured 2-3× on the IVF/LSH entries) — while
+    a checkpoint replaces it with a leaf RDD scan. That leaf has no lineage,
+    so release a frame only once nothing will read it again. The analyzed
+    plan of a checkpoint is a ``LogicalRDD`` over the pinned RDD, so only
+    that id is touched: RDDs other driver threads pin meanwhile are left
+    alone. Non-blocking. Raises ``TypeError``, releasing nothing, if any
+    frame is not a materialized checkpoint."""
+    rdds = []
+    for frame in frames:
+        plan = frame._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRDD" or not plan.rdd().isCheckpointed():
+            raise TypeError(f"release() takes localCheckpoint results, not a {plan.nodeName()} plan")
+        rdds.append(plan.rdd())
+    for rdd in rdds:
+        rdd.unpersist(False)
 
 
 def get_spark(

@@ -7,10 +7,16 @@
 - 64-bit simhash block-combination join: complete for Hamming ≤ 3
   (pigeonhole over 3-of-6 block tables) and sound vs a driver-side
   brute-force recheck;
-- single-pass minhash fold == per-seed array_min definition.
+- minhash signatures (explode → MIN aggregate) == per-seed array_min
+  definition;
+- simhash block schemes are complete for Hamming ≤ k and no wider
+  (seeded property grid over (b, k));
+- no operator leaks checkpoint blocks: after a near-dup family or
+  refine_centroids returns, the only newly pinned RDD is its result's own.
 """
 
 import itertools
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,11 +26,14 @@ from adding_datasets_to_kg_spark.operators.dedup import (
     SIMHASH_BLOCK_BOUNDS,
     SIMHASH_BLOCK_COMBOS,
     dedup_embedding_cosine,
+    dedup_minhash_lsh,
     dedup_ngram_jaccard,
     dedup_simhash64,
-    minhash_signature,
+    minhash_signatures,
     simhash64_fingerprints,
+    simhash_block_scheme,
 )
+from adding_datasets_to_kg_spark.session import release
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -134,9 +143,12 @@ def test_simhash64_banded_join_complete_and_sound(spark):
 
 
 def test_minhash_single_pass_fold_matches_per_seed_min(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet").limit(50)
+    # deterministic subset — an unordered limit() may pick different rows
+    # for the two independent jobs below
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet").filter("doc_id < 50")
     sh = shingles("text", 3)
-    fold = docs.select("doc_id", minhash_signature(sh, 4).alias("sig"))
+    sigs = minhash_signatures(docs, n_hashes=4)
+
     def hasher(i):
         # NB: must be a 1-arg lambda — a 2-arg lambda would receive the
         # element index as its second argument from F.transform.
@@ -146,9 +158,9 @@ def test_minhash_single_pass_fold_matches_per_seed_min(spark):
         "doc_id",
         F.array(*[F.array_min(F.transform(sh, hasher(i))) for i in range(4)]).alias("sig"),
     )
-    a = {r.doc_id: r.sig for r in fold.collect()}
+    a = {r.doc_id: [r[f"h{i}"] for i in range(4)] for r in sigs.collect()}
     b = {r.doc_id: r.sig for r in reference.collect()}
-    assert a == b
+    assert len(a) == 50 and a == b
 
 
 def test_survivors_match_brute_clustering(spark):
@@ -269,3 +281,93 @@ def test_simhash64_wider_scheme_exact_recall_at_hamming4(spark):
     assert brute, "fixture regression: no <=4 pairs to measure"
     # exact completeness AND soundness: the two maps are identical
     assert got == brute
+
+
+@pytest.mark.parametrize("n_blocks,k", [(4, 1), (6, 3), (7, 2), (8, 4), (10, 5), (16, 3)])
+def test_simhash_block_scheme_complete_for_k_and_tight_at_k_plus_1(n_blocks, k):
+    """Pigeonhole, checked on random fingerprints: ≤ k flipped bits touch
+    ≤ k blocks, so some (b−k)-combination of blocks still agrees; one flipped
+    bit in each of k+1 distinct blocks leaves only b−k−1 agreeing blocks,
+    so no combination does."""
+    rng = random.Random(1000 * n_blocks + k)
+    bounds, combos = simhash_block_scheme(n_blocks, k)
+    assert bounds[0][0] == 0 and bounds[-1][1] == 64
+    assert all(hi == lo for (_, hi), (lo, _) in zip(bounds, bounds[1:]))
+
+    def some_combo_agrees(x: int, y: int) -> bool:
+        same = [((x ^ y) >> lo) & ((1 << (hi - lo)) - 1) == 0 for lo, hi in bounds]
+        return any(all(same[i] for i in combo) for combo in combos)
+
+    for _ in range(200):
+        fp = rng.getrandbits(64)
+        near = fp
+        for bit in rng.sample(range(64), rng.randint(0, k)):
+            near ^= 1 << bit
+        assert some_combo_agrees(fp, near)
+        far = fp
+        for blk in rng.sample(range(n_blocks), k + 1):
+            far ^= 1 << rng.randrange(*bounds[blk])
+        assert not some_combo_agrees(fp, far)
+
+
+def _pinned_rdd_ids(spark) -> set[int]:
+    return {jrdd.id() for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values()}
+
+
+def _own_rdd_id(frame) -> int:
+    return frame._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _refined_centroids(spark):
+    from adding_datasets_to_kg_spark.functions.vectors import as_double
+    from adding_datasets_to_kg_spark.operators.similarity import refine_centroids
+
+    embs = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    c = embs.select(F.col("vec_id"), as_double("embedding").alias("v"))
+    seeds = embs.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cell_id"), as_double("embedding").alias("centroid")
+    )
+    return refine_centroids(c, seeds, n_iters=3)
+
+
+# the registry's parameters (plans/entry_queries.py)
+_CHECKPOINTING_OPS = {
+    "minhash_lsh": lambda spark: dedup_minhash_lsh(
+        spark.read.parquet(f"{SF0001}/documents.parquet")),
+    "simhash64": lambda spark: dedup_simhash64(
+        spark.read.parquet(f"{SF0001}/documents.parquet"), max_hamming=6),
+    "ngram_jaccard": lambda spark: dedup_ngram_jaccard(
+        spark.read.parquet(f"{SF0001}/documents.parquet"), threshold=0.12, max_df=5),
+    "embedding_lsh": lambda spark: dedup_embedding_cosine(
+        spark.read.parquet(f"{SF0001}/embeddings.parquet"), threshold=0.38, n_planes=16),
+    "refine_centroids": _refined_centroids,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_CHECKPOINTING_OPS))
+def test_checkpointing_ops_pin_only_their_result(spark, op):
+    """Every intermediate checkpoint (signatures, scored candidates, earlier
+    Lloyd iterations) is released by the time the operator returns; the
+    result's own RDD is the one pin left behind."""
+    before = _pinned_rdd_ids(spark)
+    out = _CHECKPOINTING_OPS[op](spark)
+    try:
+        assert _pinned_rdd_ids(spark) - before == {_own_rdd_id(out)}
+    finally:
+        release(out)
+    assert _own_rdd_id(out) not in _pinned_rdd_ids(spark)
+
+
+def test_release_rejects_frames_that_are_not_checkpoints(spark):
+    ckpt = spark.range(3).localCheckpoint(eager=True)
+    not_checkpoints = [
+        spark.range(3),
+        ckpt.filter("id > 0"),
+        spark.sparkContext.parallelize([(1,)]).toDF(["x"]),  # an un-pinned LogicalRDD
+    ]
+    for frame in not_checkpoints:
+        with pytest.raises(TypeError):
+            release(ckpt, frame)
+    assert _own_rdd_id(ckpt) in _pinned_rdd_ids(spark), "a rejected call released nothing"
+    release(ckpt)
+    assert _own_rdd_id(ckpt) not in _pinned_rdd_ids(spark)
